@@ -26,9 +26,12 @@ from __future__ import annotations
 import os
 from functools import reduce
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
+from spark_etl_pipeline_spark.operators.local_solve import dense_codes, solve_on_driver
 from spark_etl_pipeline_spark.plans.registry import register, table
 
 #: Rank scale (1.0 == RANK_SCALE). 1e9 leaves 85·in_degree·SCALE
@@ -534,11 +537,14 @@ def graph_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     FIRST appearance is at its true BFS distance, so stacking the
     per-round frontiers with their round number IS the distance map,
     no MIN aggregate needed; later rounds cost proportional to NEW
-    nodes only. Frontiers are ``localCheckpoint``-ed per round (the
-    visited set has two consumers per round — same bounded-lineage
-    discipline as connected components). Everything output is
-    exact-integer (counts, cents), so the oracle hash-matches with
-    zero float tolerance.
+    nodes only. The walk has two paths, picked by the incidence list's
+    row count against :data:`BFS_BROADCAST_MAX_ROWS`: under it (about
+    600k rows at sf0.1) the list is collected once and walked on the
+    driver in NumPy; above it the distributed loop runs, with
+    frontiers ``localCheckpoint``-ed per round (the visited set has two
+    consumers per round — same bounded-lineage discipline as connected
+    components). Everything output is exact-integer (counts, cents),
+    so the oracle hash-matches with zero float tolerance.
 
     No reference twin — extension surface (the reference has no graph
     operators); follows the same unrolled message-passing shape as
@@ -575,12 +581,14 @@ def graph_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: ``False`` disables the hint unconditionally.
 BFS_BROADCAST_FRONTIER = True
 
-#: Runtime guard on that policy (r16, VERDICT r15 item 2): the hint is
-#: applied unconditionally only when the WHOLE vertex set provably
-#: fits (one cached-read count of the incidence/edge table — frontier
-#: ⊆ vertices); otherwise each round's hint requires THAT round's
-#: frontier row count to fit, so a wide seed set (seed = half the
-#: graph) degrades to sort-merge rounds at runtime instead of an
+#: Runtime guard on that policy (r16, VERDICT r15 item 2), and the gate
+#: between the two BFS paths. When the table a walk collects (the
+#: incidence list of :func:`bfs_hops_bipartite`, the edge list of
+#: :func:`bfs_hops`) has at most this many rows, the whole vertex set
+#: fits, so the walk is solved on the driver (:func:`_bfs_on_driver`).
+#: Above it the distributed loop hints a round's broadcast only when
+#: THAT round's frontier row count fits, so a wide seed set (seed = half
+#: the graph) degrades to sort-merge rounds at runtime instead of an
 #: executor-sized forced broadcast behind a compile-time boolean.
 #: Default mirrors ``dedup.CC_BROADCAST_MAX_ROWS``:
 #: 2M rows ≈ 128 MB at a conservative 64 B/node-id — well under
@@ -599,25 +607,101 @@ def _frontier_side(df: DataFrame, bcast: bool) -> DataFrame:
     return F.broadcast(df) if bcast else df
 
 
-def bfs_hops_bipartite(
-    op: DataFrame, seeds: DataFrame, max_hops: int
-) -> DataFrame:
-    """Min-hop BFS distance over the co-membership graph IMPLIED by a
-    bipartite ``op(ok, pk)`` incidence list (two parts are adjacent iff
-    they share an ``ok``), from a ``seeds(node)`` set, bounded at
-    ``max_hops``. Returns ``(node, hop)``. One part-hop = two joins on
-    the incidence list — pairwise edges are never materialized; see
-    :func:`graph_reachability` for the scale argument and A/B.
+def _bfs_levels(ok, pk, seeds, max_hops: int):
+    """Driver-side BFS over an incidence list: part ``pk[i]`` belongs to
+    order ``ok[i]`` (dense int codes, ``-1`` for null), and two parts
+    are adjacent iff they share an order. Returns the Arrow table
+    ``(node, hop)`` the distributed loop returns for the same input.
+
+    Each hop is whole-array NumPy: the frontier's orders
+    (``np.isin``), those orders' parts, minus the visited parts. Nulls
+    follow the loop's join semantics: a null never matches, so it
+    expands nothing, and a null part is never "seen", so it is listed
+    at every hop whose reached orders hold it.
+    """
+    import pyarrow as pa
+
+    n = len(pk)
+    codes, nodes = dense_codes(pa.concat_arrays([pk, seeds]))
+    pkc, sc = codes[:n], codes[n:]
+    frontier = np.unique(sc[sc >= 0])
+    visited = np.zeros(len(nodes), dtype=bool)
+    visited[frontier] = True
+    levels = [(frontier, bool((sc < 0).any()))]
+    for _ in range(max_hops):
+        if frontier.size == 0:
+            break
+        orders = np.unique(ok[np.isin(pkc, frontier) & (ok >= 0)])
+        reached = pkc[np.isin(ok, orders)]
+        cand = np.unique(reached[reached >= 0])
+        frontier = cand[~visited[cand]]
+        visited[frontier] = True
+        levels.append((frontier, bool((reached < 0).any())))
+    parts, hops = [], []
+    for hop, (lv, has_null) in enumerate(levels):
+        parts.append(nodes.take(pa.array(lv, type=pa.int64())))
+        if has_null:
+            parts.append(pa.nulls(1, nodes.type))
+        hops.append(np.full(len(lv) + has_null, hop, dtype=np.int32))
+    return pa.table(
+        {"node": pa.concat_arrays(parts), "hop": pa.array(np.concatenate(hops))}
+    )
+
+
+def _bfs_on_driver(
+    df: DataFrame,
+    node_cols: tuple[str, ...],
+    seeds: DataFrame,
+    max_hops: int,
+    incidence,
+) -> DataFrame | None:
+    """The driver-local path both walks share; ``None`` above the gate.
+
+    ``df`` is the table the walk collects, gated on its row count. Its
+    ``node_cols`` are cast to the node type the loop's level union
+    would have, and ``incidence`` turns the collected table into
+    :func:`_bfs_levels`' ``(ok, pk)`` pair. The seeds are collected
+    only once the gate has passed. Like the loop's all-fit broadcast
+    before this path existed, they are not gated separately.
+    """
+    if not BFS_BROADCAST_FRONTIER:
+        return None
+    as_node = [df.select(F.col(c).alias("node")) for c in node_cols]
+    node_dt = (
+        reduce(DataFrame.unionByName, [seeds.select("node")] + as_node)
+        .schema["node"]
+        .dataType
+    )
+
+    def solve(table):
+        ok, pk = incidence(table)
+        seed_arr = seeds.select(F.col("node").cast(node_dt)).toArrow().column(0)
+        return _bfs_levels(ok, pk, seed_arr.combine_chunks(), max_hops)
+
+    cast = [F.col(c).cast(node_dt) if c in node_cols else c for c in df.columns]
+    schema = StructType(
+        [StructField("node", node_dt), StructField("hop", IntegerType(), False)]
+    )
+    return solve_on_driver(df.select(*cast), BFS_BROADCAST_MAX_ROWS, solve, schema)
+
+
+def _bfs_loop(expand, seeds: DataFrame, max_hops: int) -> DataFrame:
+    """The distributed walk both BFS variants share above the gate.
+    ``expand(frontier, bcast)`` returns the frontier's distinct
+    one-hop neighbors as ``node``, broadcasting the frontier side when
+    ``bcast``.
+
+    Each round pays one exact frontier count: it decides the round's
+    broadcast hint, doubles as the lazy checkpoint's materialization
+    action (the same compute the broadcast/SMJ job would otherwise run)
+    and buys an exact empty-frontier early exit.
 
     Lineage bound (deep-hop safety): every per-round frontier EXCEPT
     THE LAST is ``localCheckpoint``-ed BEFORE it joins the distance
-    map, and the map is assembled as ONE flat union over those
-    materialized frontiers at the end — so the returned plan is a
-    union of checkpointed leaf scans plus at most ONE live round (the
-    final frontier has no later consumer, so its checkpoint would be
-    a pure driver stall — r16): linear in hops, no nested lineage
-    back into earlier rounds' joins, never rebuilt per round. Pinned
-    at hops=10 by
+    map, and the map is ONE flat union over those frontiers at the end
+    — so the returned plan is a union of checkpointed leaf scans plus
+    at most ONE live round: linear in hops, no nested lineage back into
+    earlier rounds' joins. Pinned at hops=10 by
     ``tests/test_graph_triangles.py::test_bfs_deep_hops_plan_bounded``.
 
     r15 job-count optimization: the visited set is a FLAT UNION of the
@@ -625,15 +709,9 @@ def bfs_hops_bipartite(
     re-checkpointed table — the anti-join reads the same materialized
     RDDs either way, but the old shape paid one extra eager
     materialization job per round that re-wrote the (growing) visited
-    set every round (guide §1.2 step 1: remove work, then tune). With
-    :data:`BFS_BROADCAST_FRONTIER` the incidence list is never
-    shuffled; each round is one job whose only exchanges are the two
-    tiny ``distinct`` aggregates. Frontier checkpoints are LAZY
-    (``eager=False``): each round's frontier materializes inside the
-    next round's broadcast job (or the final action) instead of its
-    own driver-blocking job — the checkpointed RDD is persisted on
-    first compute and every later consumer (seen-union, level-union,
-    next round) reads the persisted rows. Measured together at sf0.1:
+    set every round. Frontier checkpoints are LAZY (``eager=False``):
+    each frontier materializes inside the next round's count instead of
+    its own driver-blocking job. Measured together at sf0.1:
     eager-everything 3.16 s → 1.56 s, identical output.
 
     Durability (deliberate tradeoff, ARCHITECTURE.md "localCheckpoint
@@ -643,41 +721,16 @@ def bfs_hops_bipartite(
     ``max_hops``-bounded walk whose inputs re-derive from parquet.
     Hour-scale deployments swap in reliable ``checkpoint()`` here.
     """
-    # Size-gated join policy (r16): every frontier is a subset of the
-    # incidence list's part-vertex set, so if the WHOLE table fits
-    # under the cap every round trivially does — one count (a cached-
-    # block read: callers pass the eagerly checkpointed incidence
-    # list) decides all rounds and no per-round gating job exists at
-    # all on the fast path. Only above the bound does each round pay
-    # an exact frontier count — that job doubles as the lazy
-    # checkpoint's materialization action (the same compute the
-    # broadcast/SMJ job would otherwise run) and is noise next to the
-    # round cost at the scale that triggers it; it also buys an exact
-    # empty-frontier early exit.
-    all_fit = BFS_BROADCAST_FRONTIER and op.count() <= BFS_BROADCAST_MAX_ROWS
     frontier = seeds.select("node").distinct().localCheckpoint(eager=False)
     frontiers = [frontier]
     levels = [frontier.select("node", F.lit(0).alias("hop"))]
     for k in range(1, max_hops + 1):
-        if all_fit:
-            bcast = True
-        else:
-            cnt = frontier.count()
-            if cnt == 0:
-                break
-            bcast = BFS_BROADCAST_FRONTIER and cnt <= BFS_BROADCAST_MAX_ROWS
+        cnt = frontier.count()
+        if cnt == 0:
+            break
+        bcast = BFS_BROADCAST_FRONTIER and cnt <= BFS_BROADCAST_MAX_ROWS
         seen = reduce(DataFrame.unionByName, frontiers)
-        orders = (
-            op.join(_frontier_side(frontier, bcast), op["pk"] == frontier["node"])
-            .select("ok")
-            .distinct()
-        )
-        cand = (
-            op.join(_frontier_side(orders, bcast), "ok")
-            .select(F.col("pk").alias("node"))
-            .distinct()
-            .join(seen, "node", "left_anti")
-        )
+        cand = expand(frontier, bcast).join(seen, "node", "left_anti")
         # r16: the LAST round's frontier has exactly one consumer (its
         # hop-level row in the final union) — nothing later reuses the
         # persisted rows, so its checkpoint is a pure driver stall:
@@ -693,44 +746,88 @@ def bfs_hops_bipartite(
     return reduce(DataFrame.unionByName, levels)
 
 
+def bfs_hops_bipartite(
+    op: DataFrame, seeds: DataFrame, max_hops: int
+) -> DataFrame:
+    """Min-hop BFS distance over the co-membership graph IMPLIED by a
+    bipartite ``op(ok, pk)`` incidence list (two parts are adjacent iff
+    they share an ``ok``), from a ``seeds(node)`` set, bounded at
+    ``max_hops``. Returns ``(node, hop)``.
+
+    Two paths, picked by one row gate on ``op`` (callers pass the
+    eagerly checkpointed incidence list, so the gate's count is a
+    cached-block read). At most :data:`BFS_BROADCAST_MAX_ROWS` rows:
+    ``op`` and the seeds are collected once through Arrow and walked on
+    the driver (:func:`_bfs_levels`), returned as a broadcast-hinted
+    local DataFrame. Above the gate: the distributed loop
+    (:func:`_bfs_loop`), where one part-hop = two joins on the
+    incidence list — pairwise edges are never materialized; see
+    :func:`graph_reachability` for the scale argument and A/B. With
+    :data:`BFS_BROADCAST_FRONTIER` off, the loop always runs.
+    """
+
+    def incidence(table):
+        ok, _ = dense_codes(table.column("ok"))
+        return ok, table.column("pk").combine_chunks()
+
+    local = _bfs_on_driver(
+        op.select("ok", "pk"), ("pk",), seeds, max_hops, incidence
+    )
+    if local is not None:
+        return local
+
+    def expand(frontier: DataFrame, bcast: bool) -> DataFrame:
+        orders = (
+            op.join(_frontier_side(frontier, bcast), op["pk"] == frontier["node"])
+            .select("ok")
+            .distinct()
+        )
+        return (
+            op.join(_frontier_side(orders, bcast), "ok")
+            .select(F.col("pk").alias("node"))
+            .distinct()
+        )
+
+    return _bfs_loop(expand, seeds, max_hops)
+
+
 def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int) -> DataFrame:
     """Min-hop BFS distance over a CANONICAL undirected edge list
     (columns ``a`` < ``b``) from a ``seeds(node)`` set, bounded at
     ``max_hops``. Returns ``(node, hop)`` — the explicit-edge twin of
-    :func:`bfs_hops_bipartite` for graphs that arrive AS edge lists;
-    same shrinking-frontier discipline and the same linear lineage
-    bound (flat union of checkpointed per-round frontiers).
+    :func:`bfs_hops_bipartite` for graphs that arrive AS edge lists.
+
+    Same two paths and the same gate rule: the rows of the table the
+    walk collects, here the edge list. Under the gate, each edge
+    becomes a two-part "order" and the bipartite driver solve runs.
+    Above it, the shared distributed loop (:func:`_bfs_loop`) expands
+    over the symmetrized edges: a union of checkpointed leaf scans plus
+    at most one live round.
     """
+
+    def incidence(table):
+        import pyarrow as pa
+
+        m = table.num_rows
+        pk = pa.concat_arrays(
+            [table.column("a").combine_chunks(), table.column("b").combine_chunks()]
+        )
+        return np.concatenate([np.arange(m), np.arange(m)]), pk
+
+    local = _bfs_on_driver(
+        edges.select("a", "b"), ("a", "b"), seeds, max_hops, incidence
+    )
+    if local is not None:
+        return local
     ed = edges.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionByName(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    # Same size-gated policy as the bipartite walk above: the vertex
-    # set is bounded by the symmetrized edge rows, so one edge count
-    # decides all rounds on the fast path.
-    all_fit = BFS_BROADCAST_FRONTIER and ed.count() <= BFS_BROADCAST_MAX_ROWS
-    frontier = seeds.select("node").distinct().localCheckpoint(eager=False)
-    frontiers = [frontier]
-    levels = [frontier.select("node", F.lit(0).alias("hop"))]
-    for k in range(1, max_hops + 1):
-        if all_fit:
-            bcast = True
-        else:
-            cnt = frontier.count()
-            if cnt == 0:
-                break
-            bcast = BFS_BROADCAST_FRONTIER and cnt <= BFS_BROADCAST_MAX_ROWS
-        seen = reduce(DataFrame.unionByName, frontiers)
-        cand = (
+
+    def expand(frontier: DataFrame, bcast: bool) -> DataFrame:
+        return (
             ed.join(_frontier_side(frontier, bcast), ed["src"] == frontier["node"])
             .select(F.col("dst").alias("node"))
             .distinct()
-            .join(seen, "node", "left_anti")
         )
-        # Same last-round rule as bfs_hops_bipartite: the final
-        # frontier feeds only its own level row, so skipping its
-        # checkpoint removes one eager AQE stage-materialization stall
-        # with zero reuse lost.
-        frontier = cand if k == max_hops else cand.localCheckpoint(eager=False)
-        frontiers.append(frontier)
-        levels.append(frontier.select("node", F.lit(k).alias("hop")))
-    return reduce(DataFrame.unionByName, levels)
+
+    return _bfs_loop(expand, seeds, max_hops)

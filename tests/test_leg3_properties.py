@@ -52,18 +52,23 @@ def _python_bfs(edges, seeds, max_hops):
     return dist
 
 
-def test_bfs_hops_matches_python_bfs(spark):
-    for seed in (0, 1, 2):
-        edges = _random_graph(seed, n_nodes=60, n_edges=90)
-        seeds = [seed, seed + 10, seed + 20]
-        expected = _python_bfs(edges, seeds, max_hops=3)
-        edges_df = spark.createDataFrame(edges, "a bigint, b bigint")
-        seeds_df = spark.createDataFrame([(s,) for s in seeds], "node bigint")
-        got = {
-            r["node"]: r["hop"]
-            for r in bfs_hops(edges_df, seeds_df, max_hops=3).collect()
-        }
-        assert got == expected, f"seed {seed}: {got} != {expected}"
+def test_bfs_hops_matches_python_bfs(spark, monkeypatch):
+    # both sides of the row gate: driver-local solve, distributed loop
+    from spark_etl_pipeline_spark.operators import graph
+
+    for cap in (graph.BFS_BROADCAST_MAX_ROWS, 0):
+        monkeypatch.setattr(graph, "BFS_BROADCAST_MAX_ROWS", cap)
+        for seed in (0, 1, 2):
+            edges = _random_graph(seed, n_nodes=60, n_edges=90)
+            seeds = [seed, seed + 10, seed + 20]
+            expected = _python_bfs(edges, seeds, max_hops=3)
+            edges_df = spark.createDataFrame(edges, "a bigint, b bigint")
+            seeds_df = spark.createDataFrame([(s,) for s in seeds], "node bigint")
+            got = {
+                r["node"]: r["hop"]
+                for r in bfs_hops(edges_df, seeds_df, max_hops=3).collect()
+            }
+            assert got == expected, f"cap {cap} seed {seed}: {got} != {expected}"
 
 
 def test_rolling_median_matches_pandas(spark):
@@ -281,10 +286,13 @@ def test_cusum_prefix_identity_matches_recurrence_end_to_end(spark, tmp_path):
         assert got[etype] == (len(xs), s, mx), etype
 
 
-def test_bipartite_bfs_matches_python_bfs(spark):
+def test_bipartite_bfs_matches_python_bfs(spark, monkeypatch):
     """The round-7 bipartite BFS (frontier -> orders -> parts, no edge
     materialization) must produce the same min-hop map as a Python BFS
-    over the implied co-membership graph, on a random incidence list."""
+    over the implied co-membership graph, on a random incidence list —
+    on both sides of the row gate (driver-local solve, distributed
+    loop)."""
+    from spark_etl_pipeline_spark.operators import graph
     from spark_etl_pipeline_spark.operators.graph import bfs_hops_bipartite
 
     rng = random.Random(47)
@@ -304,11 +312,13 @@ def test_bipartite_bfs_matches_python_bfs(spark):
 
     op = spark.createDataFrame(inc, "ok long, pk long")
     sdf = spark.createDataFrame([(s,) for s in seeds], "node long")
-    got = {
-        r["node"]: r["hop"]
-        for r in bfs_hops_bipartite(op, sdf, 3).collect()
-    }
-    assert got == expected
+    for cap in (graph.BFS_BROADCAST_MAX_ROWS, 0):
+        monkeypatch.setattr(graph, "BFS_BROADCAST_MAX_ROWS", cap)
+        got = {
+            r["node"]: r["hop"]
+            for r in bfs_hops_bipartite(op, sdf, 3).collect()
+        }
+        assert got == expected, f"cap={cap}"
 
 
 def test_bfs_broadcast_gate_fallback(spark, monkeypatch):
@@ -338,13 +348,16 @@ def test_bfs_broadcast_gate_fallback(spark, monkeypatch):
     op = spark.createDataFrame(inc, "ok long, pk long")
     edf = spark.createDataFrame(edges, "a long, b long")
     sdf = spark.createDataFrame([(s,) for s in seeds], "node long")
-    monkeypatch.setattr(graph, "BFS_BROADCAST_MAX_ROWS", 0)
-    got_bip = {
-        r["node"]: r["hop"] for r in graph.bfs_hops_bipartite(op, sdf, 3).collect()
-    }
-    got_edge = {r["node"]: r["hop"] for r in graph.bfs_hops(edf, sdf, 3).collect()}
-    assert got_bip == expected
-    assert got_edge == expected
+    # cap 0 is the fallback under test; the default cap runs the same
+    # input through the driver-local solve, the other side of the gate
+    for cap in (graph.BFS_BROADCAST_MAX_ROWS, 0):
+        monkeypatch.setattr(graph, "BFS_BROADCAST_MAX_ROWS", cap)
+        got_bip = {
+            r["node"]: r["hop"] for r in graph.bfs_hops_bipartite(op, sdf, 3).collect()
+        }
+        got_edge = {r["node"]: r["hop"] for r in graph.bfs_hops(edf, sdf, 3).collect()}
+        assert got_bip == expected
+        assert got_edge == expected
 
     frontier = sdf.localCheckpoint()
     for bcast, needle in ((True, "BroadcastHashJoin"), (False, "SortMergeJoin")):

@@ -58,6 +58,24 @@ def test_oracle_parity(spark, duck, spec):
     compare(spark_pdf, duck_pdf, spec.name)
 
 
+def test_oracle_parity_distributed_iterative_paths(spark, duck, monkeypatch):
+    """At sf0.01 every connected-components and BFS input sits under its
+    row gate, so the registry oracles above check only the driver-local
+    solves. With both caps at 0 the two headline consumers run their
+    distributed loops and must match the same oracles."""
+    from spark_etl_pipeline_spark.operators import dedup, graph
+
+    monkeypatch.setattr(dedup, "CC_BROADCAST_MAX_ROWS", 0)
+    monkeypatch.setattr(graph, "BFS_BROADCAST_MAX_ROWS", 0)
+    for name in ("docs_dedup_corpus", "graph_reachability"):
+        spec = registry.REGISTRY[name]
+        compare(
+            spec.builder(spark, SF_CORRECTNESS).toPandas(),
+            duck.sql(spec.oracle).df(),
+            name,
+        )
+
+
 def test_no_rows_only_queries_remain():
     """Every registered query is DuckDB-oracle-backed — zero rows-only
     exemptions. This replaces a parametrized run-and-count check over

@@ -322,14 +322,18 @@ def test_connected_components_broadcast_gate_fallback(spark, monkeypatch):
         assert needle in plan, f"bcast={bcast}: {plan}"
 
 
-def test_connected_components_chain_exhaustion_and_star_fallback(spark):
+def test_connected_components_chain_exhaustion_and_star_fallback(spark, monkeypatch):
     import pytest
 
+    from spark_etl_pipeline_spark.operators import dedup
     from spark_etl_pipeline_spark.operators.dedup import (
         connected_components,
         connected_components_star,
     )
 
+    # The budget and the fallback govern only the distributed loop; a
+    # row cap of 0 keeps this tiny chain off the driver-local solve.
+    monkeypatch.setattr(dedup, "CC_BROADCAST_MAX_ROWS", 0)
     # A 31-vertex chain has diameter 30: min-label propagation moves one
     # hop per round, so the default 25-round budget exhausts before the
     # fixpoint. With fallback disabled the guard must raise — never
@@ -357,6 +361,19 @@ def test_connected_components_chain_exhaustion_and_star_fallback(spark):
     assert got == want
 
 
+def test_connected_components_chain_local_solve(spark):
+    """The driver-local counterpart: under the row gate the same
+    diameter-30 chain is solved on the driver, where the round budget
+    does not apply — exact labels with ``fallback=None``, no raise."""
+    from spark_etl_pipeline_spark.operators.dedup import connected_components
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)], "src long, dst long"
+    )
+    got = {r.id: r.label for r in connected_components(chain, fallback=None).collect()}
+    assert got == {i: 0 for i in range(31)}
+
+
 def test_connected_components_star_resolves_transitive_clusters(spark):
     from spark_etl_pipeline_spark.operators.dedup import connected_components_star
 
@@ -368,14 +385,19 @@ def test_connected_components_star_resolves_transitive_clusters(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7, 9: 7, 20: 20, 21: 20}
 
 
-def test_connected_components_matches_union_find_property(spark):
-    # randomized edge lists vs a pure-Python union-find reference
+def test_connected_components_matches_union_find_property(spark, monkeypatch):
+    # randomized edge lists vs a pure-Python union-find reference, on
+    # both sides of the row gate: the distributed loop (cap 0) and the
+    # driver-local solve (default cap, left in place for the star run)
     from hypothesis import given, settings, strategies as st
 
+    from spark_etl_pipeline_spark.operators import dedup
     from spark_etl_pipeline_spark.operators.dedup import (
         connected_components,
         connected_components_star,
     )
+
+    caps = (0, dedup.CC_BROADCAST_MAX_ROWS)
 
     def uf_components(edges):
         parent = {}
@@ -407,8 +429,10 @@ def test_connected_components_matches_union_find_property(spark):
     def check(edges):
         df = spark.createDataFrame(edges, "src long, dst long")
         want = uf_components(edges)
-        got = {r.id: r.label for r in connected_components(df).collect()}
-        assert got == want
+        for cap in caps:
+            monkeypatch.setattr(dedup, "CC_BROADCAST_MAX_ROWS", cap)
+            got = {r.id: r.label for r in connected_components(df).collect()}
+            assert got == want, f"cap={cap}"
         star = {r.id: r.label for r in connected_components_star(df).collect()}
         assert star == want
 
